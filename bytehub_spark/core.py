@@ -7,9 +7,9 @@ time-travel predicate → bitemporal dedup window → resample/align LOCF —
 executed only at the caller's action.
 
 Query lifecycle parity map (SURVEY.md §3.1):
-  seed lookup        core._load_feature           [dask.py:142-148]
+  seed lookup        core._scalar_prepass         [dask.py:142-148]
   pushdown scan      storage.scan                 [dask.py:85-106]
-  default range      core._load_feature           [dask.py:150-155]
+  default range      core._scalar_prepass         [dask.py:150-155]
   time travel        timeseries.time_travel       [dask.py:119-122]
   dedup              timeseries.dedup_latest      [dask.py:156-165]
   resample/slice     timeseries.resample          [dask.py:169-191]
@@ -19,6 +19,7 @@ Query lifecycle parity map (SURVEY.md §3.1):
 from __future__ import annotations
 
 import json
+from functools import partial, reduce
 from typing import Any, Callable, Iterator, Sequence
 
 import pandas as pd
@@ -34,7 +35,7 @@ from .exceptions import (
     TransformError,
     ValidationError,
 )
-from .storage import SparkStorage
+from .storage import SparkStorage, partition_bound, partition_start
 from .utils import (
     deserialize_fn,
     join_name,
@@ -190,8 +191,9 @@ class FeatureStore:
         """
         pairs = unpack_feature_list(features)
         # ONE Spark job for all per-feature scalar lookups (default-range
-        # time bounds + LOCF seed timestamps) instead of up to 2 jobs per
-        # feature: a k-branch union collected once. Each branch is a
+        # time bounds + LOCF seed timestamps; a second only for features
+        # whose bounded seed probe came back empty) instead of up to 2 jobs
+        # per feature: a k-branch union collected once. Each branch is a
         # partial-agg over that feature's pruned scan, so the batched job
         # does the same executor work as the k separate jobs minus the
         # per-job scheduling latency (~100 ms each on a loaded driver).
@@ -423,17 +425,29 @@ class FeatureStore:
 
         Each feature's (deduped, optionally resampled/time-traveled) series
         becomes a view named from "ns/name" with non-identifier characters
-        mapped to "_" (prod/price -> prod_price), columns (time, value).
+        mapped to "_" (prod/price -> prod_price), columns (time, value);
+        two features mapping to one view name raise ValidationError.
         A Spark-native capability with no reference equivalent: ad-hoc
         SQL over bitemporally-resolved series, still one lazy plan.
         """
         import re as _re
 
-        for nsp, nm in unpack_feature_list(features):
+        pairs = unpack_feature_list(features)
+        views: dict[str, tuple] = {}
+        for pair in pairs:
+            view = _re.sub(r"[^A-Za-z0-9_]", "_", join_name(*pair))
+            other = views.setdefault(view, pair)
+            if other != pair:
+                raise ValidationError(
+                    f"Features {join_name(*other)!r} and {join_name(*pair)!r} "
+                    f"both map to SQL view {view!r}"
+                )
+        hints = self._scalar_prepass(pairs, from_date, to_date, time_travel)
+        for view, (nsp, nm) in views.items():
             sdf = self._load_feature(
-                nsp, nm, from_date, to_date, freq, time_travel, callers=[]
+                nsp, nm, from_date, to_date, freq, time_travel, callers=[],
+                hint=hints.get((nsp, nm)),
             )
-            view = _re.sub(r"[^A-Za-z0-9_]", "_", join_name(nsp, nm))
             sdf.createOrReplaceTempView(view)
         return self.spark.sql(query)
 
@@ -510,26 +524,40 @@ class FeatureStore:
     def _scalar_prepass(
         self, pairs, from_date, to_date, time_travel
     ) -> dict[tuple, dict]:
-        """Batch every per-feature scalar lookup of a multi-feature load
-        into one Spark job.
+        """Resolve every per-feature scalar a load's plan needs, batched —
+        the one source of seeds and default-range bounds for every read
+        path (load_dataframe, sql, and each transform's inputs).
 
         Two scalar kinds feed plan construction: default-range time bounds
-        (needed when from/to omitted) and the LOCF seed timestamp (the last
-        point at/before ``from_date`` — only meaningful when ``from_date``
-        is explicit: with it omitted the range starts at the data minimum,
-        which no seed can precede). Each feature contributes ONE pruned
-        scan of slim `(i, time, created_time)` rows; the scans union
-        (narrow — no per-branch query stage) into a single `groupBy(i)`
-        computing min/max/conditional-seed, so the whole prepass is one
-        shuffle and 2-3 scheduler jobs under AQE regardless of k.
-        Transform features are skipped (their leaves load recursively with
-        their own ranges).
+        (needed when from/to omitted) and the LOCF seed timestamp (J3,
+        dask.py:142-148: the last point at/before ``from_date`` — only
+        meaningful when ``from_date`` is explicit: with it omitted the range
+        starts at the data minimum, which no seed can precede). Each feature
+        contributes ONE pruned scan of slim `(i, time, created_time)` rows;
+        the scans union (narrow — no per-branch query stage) into a single
+        `groupBy(i)` computing min/max/conditional-seed, so the whole
+        prepass is one shuffle and 2-3 scheduler jobs under AQE regardless
+        of k. Transform features are skipped (_load_transform runs its own
+        prepass over its inputs).
+
+        A seed-only prepass (both ends given) costs O(range), not
+        O(history). ``partition_expr`` is non-decreasing in time, so every
+        row of a partition precedes every row of any newer partition: the
+        seed lies in the newest partition at/before ``from_date`` that holds
+        a qualifying row. The probe scans only the two newest such
+        partitions (from the driver-side directory listing — no Spark job),
+        so a seed found there is exact. Where the probe finds none but
+        older partitions exist — the time-travel predicate rejected every
+        probed row, or a partition dir holds no rows — those features alone
+        get one more batched job over the unbounded ``time <= from_date``
+        scan.
         """
         from .utils import parse_timedelta_interval
 
         hints: dict[tuple, dict] = {}
-        branches = []
-        need: dict[int, tuple[bool, bool]] = {}
+        scans: dict[int, DataFrame] = {}
+        # i -> unbounded seed scan, for features whose probe skipped history
+        fallback: dict[int, Callable[[], DataFrame]] = {}
         need_bounds = from_date is None or to_date is None
         need_seed = from_date is not None
         metas = {p: self.catalog.get_feature(*p) for p in pairs}
@@ -564,53 +592,72 @@ class FeatureStore:
                     hint["seed"] = None
                 continue
             if need_bounds:
-                sdf = storage.scan(nm, scheme=scheme, base=base)
-            else:
-                # seed-only: prune the scan to time <= from_date
-                sdf = storage.scan(nm, to_date=from_date, scheme=scheme, base=base)
-            branches.append(
-                sdf.select(
-                    F.lit(i).alias("__i"),
-                    F.col(ts.TIME_COL),
-                    F.col(ts.CREATED_COL),
+                scans[i] = storage.scan(nm, scheme=scheme, base=base)
+                continue
+            # seed-only: probe the two newest partitions at/before from_date
+            bound = partition_bound(from_date, scheme)
+            parts = [p for p in storage.list_partitions(nm) if p <= bound]
+            probe_from = None
+            if len(parts) > 2:
+                probe_from = partition_start(parts[-2], scheme)
+                fallback[i] = partial(
+                    storage.scan, nm, to_date=from_date, scheme=scheme, base=base
                 )
+            scans[i] = storage.scan(
+                nm, from_date=probe_from, to_date=from_date, scheme=scheme,
+                base=base,
             )
-            need[i] = (need_bounds, need_seed)
-        if branches:
-            allrows = branches[0]
-            for b in branches[1:]:
-                allrows = allrows.unionByName(b)
-            aggs = [
+
+        def grouped(branches: dict[int, DataFrame], aggs) -> dict:
+            """One job: per-feature aggregates over the union of slim scans.
+            Features whose scan matched no rows produce no group."""
+            if not branches:
+                return {}
+            allrows = reduce(
+                DataFrame.unionByName,
+                [
+                    sdf.select(
+                        F.lit(i).alias("__i"),
+                        F.col(ts.TIME_COL),
+                        F.col(ts.CREATED_COL),
+                    )
+                    for i, sdf in branches.items()
+                ],
+            )
+            return {r["__i"]: r for r in allrows.groupBy("__i").agg(*aggs).collect()}
+
+        aggs = []
+        if need_bounds:
+            aggs += [
                 F.min(ts.TIME_COL).alias("mn"),
                 F.max(ts.TIME_COL).alias("mx"),
             ]
-            if need_seed:
-                seed_pred = F.col(ts.TIME_COL) <= F.lit(
-                    pd.Timestamp(from_date)
-                ).cast("timestamp")
-                if time_travel:
-                    seed_pred = seed_pred & (
-                        F.col(ts.CREATED_COL)
-                        <= F.col(ts.TIME_COL)
-                        + F.expr(parse_timedelta_interval(time_travel))
-                    )
-                aggs.append(
-                    F.max(F.when(seed_pred, F.col(ts.TIME_COL))).alias("seed")
+        if need_seed:
+            seed_pred = F.col(ts.TIME_COL) <= F.lit(
+                pd.Timestamp(from_date)
+            ).cast("timestamp")
+            if time_travel:
+                seed_pred = seed_pred & (
+                    F.col(ts.CREATED_COL)
+                    <= F.col(ts.TIME_COL)
+                    + F.expr(parse_timedelta_interval(time_travel))
                 )
-            for row in allrows.groupBy("__i").agg(*aggs).collect():
-                hint = hints[pairs[row["__i"]]]
-                if need_bounds:
-                    hint["bounds"] = (row["mn"], row["mx"])
-                if need_seed:
-                    hint["seed"] = row["seed"]
-            # features whose scan matched no rows produce no group — their
-            # scalars are null
-            for i in need:
-                hint = hints[pairs[i]]
-                if need_bounds:
-                    hint.setdefault("bounds", (None, None))
-                if need_seed:
-                    hint.setdefault("seed", None)
+            seed_agg = F.max(F.when(seed_pred, F.col(ts.TIME_COL))).alias("seed")
+            aggs.append(seed_agg)
+        rows = grouped(scans, aggs)
+        for i in scans:
+            hint, row = hints[pairs[i]], rows.get(i)
+            if need_bounds:
+                hint["bounds"] = (None, None) if row is None else (row["mn"], row["mx"])
+            if need_seed:
+                hint["seed"] = None if row is None else row["seed"]
+        retry = {
+            i: scan() for i, scan in fallback.items() if hints[pairs[i]]["seed"] is None
+        }
+        if retry:
+            rows = grouped(retry, [seed_agg])
+            for i in retry:
+                hints[pairs[i]]["seed"] = rows[i]["seed"] if i in rows else None
         return hints
 
     def _load_feature(
@@ -625,7 +672,11 @@ class FeatureStore:
         last_only: bool = False,
         hint: dict | None = None,
     ) -> DataFrame:
-        """Single feature -> DataFrame(time, value). Dispatches transforms."""
+        """Single feature -> DataFrame(time, value). Dispatches transforms.
+
+        ``hint`` is the feature's entry from _scalar_prepass over the same
+        (from_date, to_date, time_travel); a stored feature needs it unless
+        ``last_only``."""
         meta = self.catalog.get_feature(namespace, name)
         if meta is None:
             raise MissingFeatureException(f"Feature {namespace}/{name} does not exist")
@@ -654,15 +705,11 @@ class FeatureStore:
             df = base.where(F.col("partition") == parts[0]).drop("partition")
             return ts.dedup_latest(df)
 
-        # default range = data min/max (dask.py:150-155)
+        # default range = data min/max (dask.py:150-155); the bounds and the
+        # seed below come from the caller's _scalar_prepass
         eff_from, eff_to = from_date, to_date
         if eff_from is None or eff_to is None:
-            if hint is not None and "bounds" in hint:
-                mn, mx = hint["bounds"]
-            else:
-                mn, mx = ts.time_bounds(
-                    storage.scan(name, scheme=scheme, base=base, value_type=vt)
-                )
+            mn, mx = hint["bounds"]
             if eff_from is None:
                 eff_from = mn
             if eff_to is None:
@@ -677,24 +724,11 @@ class FeatureStore:
             if pd.Timestamp(eff_to) < pd.Timestamp(eff_from):
                 eff_to = eff_from  # clamp (dask.py:154-155)
 
-        # seed lookup (J3, dask.py:142-148): extend scan to the last point
-        # at/before from so LOCF has a value at the range boundary. Only
-        # when from_date is EXPLICIT: an omitted from_date defaults to the
-        # data minimum, which no seed row can precede — the lookup would
-        # be a guaranteed-no-op Spark job.
+        # seed (J3, dask.py:142-148): extend the scan back to the last point
+        # at/before from so LOCF has a value at the range boundary
         scan_from = eff_from
-        if from_date is not None:
-            if hint is not None and "seed" in hint:
-                seed_t = hint["seed"]
-            else:
-                seed_df = storage.scan(
-                    name, to_date=from_date, scheme=scheme, base=base, value_type=vt
-                )
-                if time_travel:
-                    seed_df = ts.time_travel(seed_df, time_travel)
-                seed_t = seed_df.agg(F.max(ts.TIME_COL).alias("t")).collect()[0]["t"]
-            if seed_t is not None:
-                scan_from = seed_t
+        if from_date is not None and hint["seed"] is not None:
+            scan_from = hint["seed"]
 
         df = storage.scan(
             name, from_date=scan_from, to_date=eff_to, scheme=scheme, base=base,
@@ -756,12 +790,15 @@ class FeatureStore:
         fn = deserialize_fn(payload["function"])
         args: list[str] = payload["args"]
 
+        pairs = [split_name(full) for full in args]
+        hints = {} if last_only else self._scalar_prepass(
+            pairs, from_date, to_date, time_travel
+        )
         inputs: list[DataFrame] = []
-        for full in args:
-            nsp, nm = split_name(full)
+        for full, (nsp, nm) in zip(args, pairs):
             sdf = self._load_feature(
                 nsp, nm, from_date, to_date, freq, time_travel,
-                callers=callers, last_only=last_only,
+                callers=callers, last_only=last_only, hint=hints.get((nsp, nm)),
             )
             inputs.append(
                 sdf.select(ts.TIME_COL, F.col(ts.VALUE_COL).alias(full))

@@ -55,6 +55,12 @@ def partition_bound(value, scheme: str) -> str:
     return v.strftime("%Y-%m-%d") if scheme == "date" else v.strftime("%Y")
 
 
+def partition_start(value: str, scheme: str) -> pd.Timestamp:
+    """Earliest time a partition can hold — the inverse of partition_bound
+    ('2023-05-04' → 2023-05-04 00:00, '2023' → 2023-01-01 00:00)."""
+    return pd.to_datetime(value, format="%Y-%m-%d" if scheme == "date" else "%Y")
+
+
 # fsspec-style credential names (what the reference accepts in a
 # namespace's storage_options: _storage/dask.py:15-16, _model.py:87) →
 # s3a Hadoop conf suffixes. Unknown keys pass through verbatim when they

@@ -353,7 +353,7 @@ def align(
 
 
 # ---------------------------------------------------------------------------
-# A2/A4 — first/last row, min/max of the time axis
+# A2 — first/last row
 # ---------------------------------------------------------------------------
 
 def first_row(df: DataFrame, time_col: str = TIME_COL):
@@ -362,11 +362,3 @@ def first_row(df: DataFrame, time_col: str = TIME_COL):
 
 def last_row(df: DataFrame, time_col: str = TIME_COL):
     return df.orderBy(F.col(time_col).desc()).limit(1)
-
-
-def time_bounds(df: DataFrame, time_col: str = TIME_COL):
-    """(min, max) of the time axis as python values (None, None) if empty."""
-    row = df.agg(
-        F.min(time_col).alias("mn"), F.max(time_col).alias("mx")
-    ).collect()[0]
-    return row["mn"], row["mx"]

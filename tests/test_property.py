@@ -116,10 +116,16 @@ def test_two_pass_locf_matches_pandas_ffill(spark, n, null_frac, seed):
 
 
 bitemporal_strategy = st.builds(
-    lambda n_appends, n_times, tt, seed: (n_appends, n_times, tt, seed),
+    lambda n_appends, n_times, tt, step, freq, seed: (
+        n_appends, n_times, tt, step, freq, seed
+    ),
     n_appends=st.integers(min_value=1, max_value=4),
     n_times=st.integers(min_value=2, max_value=15),
     tt=st.sampled_from([None, "-30min", "-2h", "1h"]),
+    # 9h and 1d steps cross date partitions, so ranged loads need the seed
+    # probe (and its full-history fallback when time travel empties it)
+    step=st.sampled_from(["1h", "9h", "1d"]),
+    freq=st.sampled_from([None, "1h", "5h", "1d"]),
     seed=st.integers(min_value=0, max_value=10_000),
 )
 
@@ -127,13 +133,14 @@ bitemporal_strategy = st.builds(
 @given(spec=bitemporal_strategy)
 @settings(**SETTINGS)
 def test_bitemporal_load_matches_pandas_model(fs_factory, spec):
-    """Full load path (appends -> dedup -> time travel -> range) vs an
-    independent pandas model of the reference semantics
-    (dask.py:119-122 time travel, dask.py:156-165 dedup)."""
-    n_appends, n_times, tt, seed = spec
+    """Full load path (appends -> dedup -> time travel -> range or LOCF
+    grid) vs an independent pandas model of the reference semantics
+    (dask.py:119-122 time travel, dask.py:156-165 dedup, dask.py:142-148
+    seed + as-of grid)."""
+    n_appends, n_times, tt, step, freq, seed = spec
     fs = fs_factory()
     rng = np.random.default_rng(seed)
-    times = pd.date_range("2021-03-01", periods=n_times, freq="1h")
+    times = pd.date_range("2021-03-01", periods=n_times, freq=pd.Timedelta(step))
     fs.create_feature("test/prop_bt")
     frames = []
     for k in range(n_appends):
@@ -142,29 +149,39 @@ def test_bitemporal_load_matches_pandas_model(fs_factory, spec):
         f = pd.DataFrame(
             {
                 "time": times[keep],
-                "created_time": times[keep] + pd.Timedelta(minutes=int(rng.integers(0, 180))),
+                # known before or after the fact, so negative time_travel
+                # offsets keep some rows and reject others
+                "created_time": times[keep]
+                + pd.Timedelta(minutes=int(rng.integers(-180, 180))),
                 "value": rng.normal(size=keep.sum()),
             }
         )
         fs.save_dataframe(f, "test/prop_bt")
         frames.append(f)
 
-    lo = times[int(rng.integers(0, n_times))]
-    hi = times[int(rng.integers(0, n_times))]
-    if hi < lo:
-        lo, hi = hi, lo
-    got = fs.load_pandas("test/prop_bt", from_date=lo, to_date=hi, time_travel=tt)
+    # from_date may fall between points, so the range starts on a seed
+    lo = (times[int(rng.integers(0, n_times))] + pd.Timedelta(step) * rng.random()).floor("min")
+    hi = max(lo, times[int(rng.integers(0, n_times))])
+    got = fs.load_pandas(
+        "test/prop_bt", from_date=lo, to_date=hi, freq=freq, time_travel=tt
+    )
 
     # pandas model: time travel filter, then latest created_time per time,
-    # then inclusive range slice
+    # then the inclusive range slice, or the as-of value at each grid point
     allf = pd.concat(frames, ignore_index=True)
     if tt is not None:
         allf = allf[allf["created_time"] <= allf["time"] + pd.Timedelta(tt)]
-    allf = allf.sort_values(["time", "created_time"]).groupby("time").last()
-    exp = allf.loc[(allf.index >= lo) & (allf.index <= hi), "value"]
+    latest = allf.sort_values(["time", "created_time"]).groupby("time")["value"].last()
+    if freq is None:
+        exp = latest.loc[(latest.index >= lo) & (latest.index <= hi)]
+    else:
+        grid = pd.date_range(lo, hi, freq=pd.Timedelta(freq))
+        exp = latest.reindex(latest.index.union(grid)).ffill().reindex(grid)
 
     assert len(got) == len(exp)
+    if freq is not None:
+        assert (got.index == exp.index).all()
     if len(exp):
         np.testing.assert_allclose(
-            got["test/prop_bt"].to_numpy(), exp.to_numpy(), rtol=1e-12
+            got["test/prop_bt"].to_numpy(dtype=float), exp.to_numpy(), rtol=1e-12
         )

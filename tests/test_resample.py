@@ -8,6 +8,7 @@ across gaps; to_date < from_date clamps to from_date.
 
 import numpy as np
 import pandas as pd
+import pytest
 
 rng = np.random.default_rng(7)
 
@@ -102,6 +103,118 @@ def test_seed_before_range(fs):
                          to_date="2021-01-05", freq="1d")
     # grid: 01-03 12:00, 01-04 12:00 → values from 01-03 (2.0), 01-04 (3.0)
     np.testing.assert_allclose(out["test/s1"].values, [2.0, 3.0])
+
+
+def asof_model(frames, from_date, to_date, freq, time_travel=None):
+    """Pandas as-of model of one bitemporal feature on a LOCF grid:
+    time-travel filter, latest created_time per time, then the last value
+    at/before each grid point — the seed before from_date included."""
+    rows = pd.concat(frames, ignore_index=True)
+    if time_travel is not None:
+        rows = rows[rows["created_time"] <= rows["time"] + pd.Timedelta(time_travel)]
+    s = rows.sort_values(["time", "created_time"]).groupby("time")["value"].last()
+    grid = pd.date_range(from_date, to_date, freq=pd.Timedelta(freq))
+    return s.reindex(s.index.union(grid)).ffill().reindex(grid)
+
+
+def save_rows(fs, name, times, created_offset="-2h", start=0.0):
+    """Save rows at ``times`` valued start, start+1, ... and known at
+    time + created_offset; returns the saved frame for the model."""
+    frame = pd.DataFrame({
+        "time": times,
+        "created_time": times + pd.Timedelta(created_offset),
+        "value": start + np.arange(len(times), dtype=float),
+    })
+    fs.save_dataframe(frame, name)
+    return frame
+
+
+def assert_grid(got, exp):
+    assert (got.index == exp.index).all()
+    np.testing.assert_allclose(got.to_numpy(dtype=float), exp.to_numpy(dtype=float))
+
+
+# a date-partitioned feature with 5 days of data, 13 empty days, then more:
+# the seed for from_date=GAP_FROM is the last point before the gap
+GAP_EARLY = pd.date_range("2021-01-01", "2021-01-05 23:00", freq="h")
+GAP_LATE = pd.date_range("2021-01-19", "2021-01-21 23:00", freq="h")
+GAP_FROM, GAP_TO = pd.Timestamp("2021-01-18 06:00"), pd.Timestamp("2021-01-20")
+
+
+def save_gap_feature(fs, name, start):
+    fs.create_feature(name, partition="date")
+    return [save_rows(fs, name, GAP_EARLY.append(GAP_LATE), start=start)]
+
+
+def test_seed_across_empty_partitions(fs):
+    """The seed sits 13 empty days before from_date: the probe follows the
+    partition listing, not the calendar, and still finds it."""
+    frames = save_gap_feature(fs, "test/gap", 0.0)
+    out = fs.load_pandas("test/gap", from_date=GAP_FROM, to_date=GAP_TO, freq="6h")
+    exp = asof_model(frames, GAP_FROM, GAP_TO, "6h")
+    assert exp.iloc[0] == len(GAP_EARLY) - 1  # seeded from 01-05 23:00
+    assert_grid(out["test/gap"], exp)
+
+
+def test_seed_time_travel_falls_back_to_older_partition(fs):
+    """Every row of the two newest partitions at/before from_date was known
+    a day late, so time_travel="-1h" rejects them all and the seed must come
+    from an older partition (the fallback over the full history)."""
+    fs.create_feature("test/tt", partition="date")
+    frames = [
+        save_rows(fs, "test/tt", pd.date_range("2021-01-01", "2021-01-03 23:00", freq="h")),
+        save_rows(fs, "test/tt", pd.date_range("2021-01-09", "2021-01-10 12:00", freq="h"),
+                  created_offset="1d", start=100.0),
+        save_rows(fs, "test/tt", pd.date_range("2021-01-10 13:00", "2021-01-12", freq="h"),
+                  start=200.0),
+    ]
+    lo, hi = pd.Timestamp("2021-01-10 12:00"), pd.Timestamp("2021-01-11 12:00")
+    for tt in (None, "-1h"):
+        out = fs.load_pandas("test/tt", from_date=lo, to_date=hi, freq="3h", time_travel=tt)
+        exp = asof_model(frames, lo, hi, "3h", time_travel=tt)
+        assert_grid(out["test/tt"], exp)
+    # with time travel the seed is 01-03 23:00 (value 71), not 01-10 12:00
+    assert exp.iloc[0] == 71.0
+    raw = fs.load_pandas("test/tt", from_date=lo, to_date=hi, time_travel="-1h")
+    assert raw.index.min() == pd.Timestamp("2021-01-10 13:00")
+
+
+def test_seed_across_gap_multi_feature_and_sql(fs):
+    """The same gap through the two-feature freq load (long-format path)
+    and through fs.sql, which share the batched prepass."""
+    fa = save_gap_feature(fs, "test/ga", 0.0)
+    fb = save_gap_feature(fs, "test/gb", 1000.0)
+    ea = asof_model(fa, GAP_FROM, GAP_TO, "6h")
+    eb = asof_model(fb, GAP_FROM, GAP_TO, "6h")
+    out = fs.load_pandas(["test/ga", "test/gb"], from_date=GAP_FROM,
+                         to_date=GAP_TO, freq="6h")
+    assert_grid(out["test/ga"], ea)
+    assert_grid(out["test/gb"], eb)
+    got = fs.sql(
+        "SELECT a.time, a.value + b.value AS value "
+        "FROM test_ga a JOIN test_gb b ON a.time = b.time ORDER BY a.time",
+        ["test/ga", "test/gb"], from_date=GAP_FROM, to_date=GAP_TO, freq="6h",
+    ).toPandas().set_index("time")["value"]
+    assert_grid(got, ea + eb)
+
+
+def test_seed_probe_skips_old_partitions(fs):
+    """A ranged load reads no partition older than the seed probe window:
+    garbage bytes in an old partition's file fail any read that touches it,
+    yet a later window loads correctly."""
+    import os
+
+    fs.create_feature("test/junk", partition="date")
+    frames = [save_rows(fs, "test/junk", pd.date_range("2021-01-01", "2021-01-10", freq="h"))]
+    url = fs.catalog.get_namespace("test")["url"]
+    with open(os.path.join(url, "feature", "junk", "partition=2021-01-02",
+                           "part-x.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    lo, hi = pd.Timestamp("2021-01-08 12:30"), pd.Timestamp("2021-01-09 06:00")
+    out = fs.load_pandas("test/junk", from_date=lo, to_date=hi, freq="1h")
+    assert_grid(out["test/junk"], asof_model(frames, lo, hi, "1h"))
+    with pytest.raises(Exception):
+        fs.load_pandas("test/junk")  # the full history does read the file
 
 
 def test_to_before_from_clamps(fs):

@@ -128,6 +128,17 @@ def test_sql_over_features(fs):
     np.testing.assert_allclose(out["notional"], np.arange(10.0) ** 2 * 2)
 
 
+def test_sql_view_name_collision(fs):
+    """Two features whose names map to the same view name raise instead of
+    the second view silently replacing the first."""
+    idx = pd.date_range("2021-01-01", periods=3, freq="D")
+    for name in ("test/a-b", "test/a_b"):
+        fs.create_feature(name)
+        fs.save_dataframe(pd.DataFrame({"time": idx, "value": np.arange(3.0)}), name)
+    with pytest.raises(ValidationError, match="test/a-b.*test/a_b.*test_a_b"):
+        fs.sql("SELECT * FROM test_a_b", ["test/a-b", "test/a_b"])
+
+
 def test_materialize_rollup(fs):
     """Materialized daily rollup equals the on-the-fly resample."""
     idx = pd.date_range("2021-01-01", periods=96, freq="h")
